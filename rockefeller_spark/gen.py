@@ -150,14 +150,16 @@ def gen_change_events(spark: SparkSession, n_events: int = 10_000,
         # so span reads could never skip anything. Beyond _SCRAMBLE_MAX_N
         # events the affine product could overflow int64; the legacy
         # shuffle path below keeps correctness there.
+        # The offset goes through pmod: Spark's % takes the dividend's
+        # sign, so a negative seed's q would map ids out of their segment.
         p = _SCRAMBLE_PRIMES[seed % len(_SCRAMBLE_PRIMES)]
         q = seed * 2_654_435_761 + 40_503
         seg = max(-(-n_events // 256), 4096)   # >=4096: tiny logs stay
         base = (F.col("id") / F.lit(seg)).cast("long") * F.lit(seg)
         seg_len = F.least(F.lit(n_events) - base, F.lit(seg))
         ids = ids.select(
-            (base + ((F.col("id") - base) * F.lit(p) + F.lit(q) % seg_len)
-             % seg_len).alias("id"))
+            (base + ((F.col("id") - base) * F.lit(p)
+                     + F.pmod(F.lit(q), seg_len)) % seg_len).alias("id"))
         shuffled = False            # physical order already scrambled
     dup_cut = int(p_dup_lsn * _U_SCALE)
     del_cut = int(p_delete * _U_SCALE)

@@ -85,6 +85,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rockefeller_spark.backends import PosixBackend
+from rockefeller_spark.schema import KEY_COLS
 
 try:                             # ~5x faster manifest parse when present
     import orjson as _fastjson   # public PyPI package, optional
@@ -386,6 +387,15 @@ class Snapshot:
                  loader: Callable[[str], list[DataFile]] | None = None,
                  cols_loader: Callable[[str], dict[str, list]] | None = None,
                  name_log: list[dict[str, Any]] | None = None):
+        # The apply merge and compaction resolve last-writer-wins per
+        # (bucket, key); that equals a per-key resolve only when the bucket
+        # is a function of the key. Checked here so both create() and a
+        # load of older metadata refuse a non-key bucket column.
+        if bucket_col not in KEY_COLS:
+            raise ValueError(
+                f"bucket_col {bucket_col!r} is not a key column "
+                f"{KEY_COLS}: the per-(bucket, key) LWW resolve would keep "
+                f"one winner per bucket instead of one per key")
         self.snapshot_id = snapshot_id
         self.parent_id = parent_id
         self.schema = schema
@@ -818,13 +828,13 @@ class LakeTable:
     @classmethod
     def create(cls, spark: SparkSession, path: str, schema: T.StructType,
                n_buckets: int = 32, bucket_col: str = "conv_id") -> "LakeTable":
+        snap = Snapshot(0, None, schema, n_buckets, bucket_col, [],
+                        timestamp_ms=int(time.time() * 1000))
         t = cls(spark, path)
         if t.backend.exists(t._HINT_REL):
             raise FileExistsError(f"table already exists at {path}")
         os.makedirs(t.data_dir, exist_ok=True)
         os.makedirs(t.meta_dir, exist_ok=True)
-        snap = Snapshot(0, None, schema, n_buckets, bucket_col, [],
-                        timestamp_ms=int(time.time() * 1000))
         t._write_snapshot(snap)
         return t
 
@@ -2087,7 +2097,6 @@ class LakeTable:
         pre_bucketed = False
         if snap.multi_version:
             from rockefeller_spark.cdc import dedupe_lww
-            from rockefeller_spark.schema import KEY_COLS
             if (target_rows_per_file is None and not zorder_by
                     and not write_salt
                     and set(KEY_COLS) <= set(df.columns)):

@@ -30,6 +30,25 @@ def test_create_load_exists(spark, tmp_path, table):
         LakeTable.create(spark, table.path, STORED_TRANSCRIPT_SCHEMA)
 
 
+def test_non_key_bucket_col_rejected(spark, tmp_path, table):
+    """Apply and compaction resolve LWW per (bucket, key): with a bucket
+    column outside the key, two versions of one key could land in
+    different buckets and both survive. create() refuses such a column,
+    and so does loading metadata written before the check existed."""
+    with pytest.raises(ValueError, match="bucket_col 'role'"):
+        LakeTable.create(spark, str(tmp_path / "bad"),
+                         STORED_TRANSCRIPT_SCHEMA, bucket_col="role")
+    assert not LakeTable.exists(str(tmp_path / "bad"))
+    meta = os.path.join(table.path, "metadata", "v00000000.json")
+    with open(meta) as fh:
+        d = json.load(fh)
+    d["bucket_col"] = "role"
+    with open(meta, "w") as fh:
+        json.dump(d, fh)
+    with pytest.raises(ValueError, match="not a key column"):
+        LakeTable.load(spark, table.path)
+
+
 def test_commit_conflict_single_winner(spark, table):
     base = gen.gen_transcripts(spark, n_convs=5, seed=1)
     bootstrap(table, base)

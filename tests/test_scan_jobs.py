@@ -1,0 +1,53 @@
+"""Building a table scan launches no Spark job, at any file count.
+
+LakeTable.read hands the scan its exact file paths from the manifests.
+Spark lists more than ``parallelPartitionDiscovery.threshold`` (default
+32) paths with a distributed job, one task per path; the engine's session
+raises that threshold so no scan pays for a listing job.
+"""
+
+from __future__ import annotations
+
+import pandas as pd
+
+from rockefeller_spark import gen
+from rockefeller_spark.lake import LakeTable
+from rockefeller_spark.merge import apply_batch, read_state
+from rockefeller_spark.oracle import replay
+from rockefeller_spark.schema import STORED_TRANSCRIPT_SCHEMA
+
+
+def test_scans_over_many_files_launch_no_job(spark, tmp_path):
+    table = LakeTable.create(spark, str(tmp_path / "t"),
+                             STORED_TRANSCRIPT_SCHEMA, n_buckets=32)
+    ev = gen.gen_change_events(spark, n_events=4000, n_convs=200, seed=91)
+    pdf = ev.toPandas()
+    # one CoW batch lays down the bucket files, three MOR batches append
+    # bucket-spanning deltas on top
+    for k, mode in enumerate(["cow", "mor", "mor", "mor"]):
+        apply_batch(table, spark.createDataFrame(pdf[pdf.lsn % 4 == k],
+                                                 ev.schema), mode=mode)
+    snap = table.current()
+    assert snap.multi_version
+    deltas = sum(f.bucket is None for f in snap.files)
+    assert 3 <= deltas < len(snap.files)
+    assert len(snap.files) > 32
+
+    keys = sorted(pdf.conv_id.unique())
+    sc = spark.sparkContext
+    sc.setJobGroup("scan-build", "must run no jobs")
+    try:
+        scan = table.read()
+        state = read_state(table)
+        many = table.lookup_many(keys)
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("scan-build") == []
+    assert len(scan.inputFiles()) == len(snap.files)
+    assert len(many.inputFiles()) > 32
+
+    got = state.toPandas().sort_values(["conv_id", "turn_idx"]) \
+        .reset_index(drop=True)
+    want = replay(pdf)
+    pd.testing.assert_frame_equal(got[want.columns.tolist()], want,
+                                  check_dtype=False)
