@@ -20,8 +20,9 @@ What is measured per table size F (driver-side, no Spark):
   disk with a cold cache — what a full-table scan's planning still pays
   once per process, O(F) by necessity (it returns every entry).
 - ``wap_stage_sec`` / ``wap_publish_sec``: write-audit-publish metadata
-  bill — the stage marker PUT (O(adds)) and the publish (covering-shard
-  commit + idempotence lineage scan over retained snapshots); a WAP
+  bill — staging as a one-commit branch (branch create + covering-shard
+  commit) and the publish (changed-shard diff + covering-shard commit on
+  main + idempotence lineage scan over retained snapshots); a WAP
   pipeline pays these per batch, so both must stay ~flat in F.
 - ``n_shards``: manifest-shard count — grows with F via range splits.
 
@@ -158,18 +159,21 @@ def main() -> None:
             assert npaths == n
 
             # write-audit-publish at F files (runs LAST — the publish
-            # changes the live file set): the stage marker is O(adds) and
-            # the publish is the same covering-shard commit plus the
-            # idempotence lineage scan over RETAINED snapshots — both must
-            # stay flat in F (a WAP pipeline stages/publishes every batch)
+            # changes the live file set): a stage is a one-commit branch,
+            # so staging is a branch create plus a covering-shard commit
+            # of the bucket-3 overwrite, and the publish diffs the changed
+            # shards, commits them on main and scans RETAINED snapshots
+            # for an earlier publish — both must stay flat in F (a WAP
+            # pipeline stages/publishes every batch)
             add2 = DataFile(f"data/{'e'*32}-b00003.parquet", 3, 100, 3, 4)
             t0 = time.perf_counter()
-            wap = table._stage_put("overwrite", [add2], [3], wap_id=None,
-                                   stream_id=None, epoch=None,
-                                   lineage={}, note=None)
+            table.create_branch("wap")
+            staging = table.on_branch("wap")
+            staging.commit([add2], {f.path for f in
+                                    staging.current().files_for({3})})
             stage_wall = time.perf_counter() - t0
             t0 = time.perf_counter()
-            table.publish_staged(wap)
+            table.publish_branch("wap")
             publish_wall = time.perf_counter() - t0
 
             list_bytes = os.path.getsize(table._meta_path(1))

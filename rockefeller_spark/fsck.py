@@ -286,25 +286,6 @@ def check_table(table: LakeTable, *, snapshot_id: int | None = None,
                         f"branch {name!r}: {p} missing (orphan sweep ran "
                         "without the branch pin?)")
 
-    # -- staged commits: publishable = base on disk + files present -----
-    try:
-        staged = table.staged()
-    except Exception as e:
-        rep.add("error", "unreadable-staged",
-                f"staged dir unreadable: {type(e).__name__}: {e}")
-        staged = {}
-    for wap_id, st in staged.items():
-        try:
-            table.snapshot(int(st["base"]))
-        except Exception:
-            rep.add("warning", "staged-base-missing",
-                    f"staged {wap_id!r}: base v{st.get('base')} expired — "
-                    "publish will refuse; abandon + re-stage")
-        for d in st.get("adds", ()):
-            if not os.path.exists(os.path.join(table.path, d["path"])):
-                rep.add("error", "staged-file-missing",
-                        f"staged {wap_id!r}: {d['path']} missing (orphan "
-                        "sweep ran without the marker protection?)")
     return rep
 
 

@@ -27,12 +27,14 @@ BASE_EPOCH_S = 1_700_000_000  # 2023-11-14 22:13:20 UTC, arbitrary fixed origin
 _U_SCALE = 1_000_003  # prime; uniform granularity for hash->[0,1)
 
 # Multipliers for the shuffled=True affine index scramble (all verified
-# prime, all > 2^32 so they are coprime to ANY n_events < 2^32 — a prime p
-# divides n only when p <= n). id*p + q stays within int64 for
-# n_events <= 2*10^9 (max product ~8.6*10^18 < 2^63).
+# prime, all > 2^32 so they are coprime to any segment length < 2^32 — a
+# prime p divides a length only when p <= length). The scramble computes
+# (id - base) * p + (q mod seg_len) < seg * (p + 1) with
+# seg = ceil(n_events / 256) once n_events exceeds 256 * 4096, so it stays
+# within int64 while seg <= (2^63 - 1) // (p + 1): about 5.5*10^11 events.
 _SCRAMBLE_PRIMES = [4294967311, 4294967357, 4294967371, 4294967377,
                     4294967387, 4294967389, 4294967459, 4294967477]
-_SCRAMBLE_MAX_N = 2_000_000_000
+_SCRAMBLE_MAX_N = 256 * ((2**63 - 1) // (max(_SCRAMBLE_PRIMES) + 1))
 
 
 def _u(col, seed: int, salt: int):
@@ -126,12 +128,16 @@ def gen_change_events(spark: SparkSession, n_events: int = 10_000,
     - ``op`` is 'D' with prob ``p_delete``, else 'I'/'U' (both upsert).
     - payload columns are pure functions of ``lsn``.
     - ``shuffled=True`` scrambles row order (out-of-order delivery) without
-      changing the set of rows.
+      changing the set of rows, with no shuffle; it supports up to
+      ``_SCRAMBLE_MAX_N`` (~5.5*10^11) events and raises ValueError above.
     - ``evolved=True`` adds the additive-epoch columns
       (tool_call_id, latency_ms) per FIXTURES.md §3.
     """
+    if shuffled and n_events > _SCRAMBLE_MAX_N:
+        raise ValueError(f"shuffled=True supports at most {_SCRAMBLE_MAX_N} "
+                         f"events (int64 scramble bound), got {n_events}")
     ids = spark.range(0, n_events, numPartitions=num_partitions)
-    if shuffled and 0 < n_events <= _SCRAMBLE_MAX_N:
+    if shuffled:
         # Out-of-order delivery WITHOUT a shuffle, laid out the way a
         # binlog actually lands on disk: the log is split into fixed
         # LSN segments and row i is remapped through a modular-affine
@@ -144,23 +150,16 @@ def gen_change_events(spark: SparkSession, n_events: int = 10_000,
         # stay segment-tight, so an LSN-span read of the WAL (micro-batch
         # slicing, catch-up chunks) prunes on parquet footer stats
         # instead of re-decoding the whole log per span (guide §6).
-        # The previous implementation repartitioned + sorted the fully
-        # built payload rows by a hash column — a full shuffle and sort
-        # of the entire log per call, and every file spanned every LSN,
-        # so span reads could never skip anything. Beyond _SCRAMBLE_MAX_N
-        # events the affine product could overflow int64; the legacy
-        # shuffle path below keeps correctness there.
         # The offset goes through pmod: Spark's % takes the dividend's
         # sign, so a negative seed's q would map ids out of their segment.
         p = _SCRAMBLE_PRIMES[seed % len(_SCRAMBLE_PRIMES)]
         q = seed * 2_654_435_761 + 40_503
         seg = max(-(-n_events // 256), 4096)   # >=4096: tiny logs stay
-        base = (F.col("id") / F.lit(seg)).cast("long") * F.lit(seg)
+        base = F.col("id") - F.col("id") % F.lit(seg)
         seg_len = F.least(F.lit(n_events) - base, F.lit(seg))
         ids = ids.select(
             (base + ((F.col("id") - base) * F.lit(p)
                      + F.pmod(F.lit(q), seg_len)) % seg_len).alias("id"))
-        shuffled = False            # physical order already scrambled
     dup_cut = int(p_dup_lsn * _U_SCALE)
     del_cut = int(p_delete * _U_SCALE)
     # duplicate: this row replays the previous event's lsn (never for id 0)
@@ -198,14 +197,7 @@ def gen_change_events(spark: SparkSession, n_events: int = 10_000,
             F.when(is_del, F.lit(None).cast("int"))
              .otherwise(F.pmod(F.xxhash64(F.col("lsn"), F.lit(seed), F.lit(10)), F.lit(5000)).cast("int")).alias("latency_ms"),
         ]
-    out = df.select(*cols)
-    if shuffled:
-        # out-of-order delivery: scramble physical order deterministically
-        out = (out.withColumn("_shuf", F.xxhash64(F.col("lsn"), F.col("event_ts"), F.lit(seed), F.lit(11)))
-                  .repartition(num_partitions or spark.sparkContext.defaultParallelism, F.col("_shuf"))
-                  .sortWithinPartitions("_shuf")
-                  .drop("_shuf"))
-    return out
+    return df.select(*cols)
 
 
 def expected_schema(evolved: bool = False):

@@ -86,6 +86,7 @@ from pyspark.sql import types as T
 
 from rockefeller_spark.backends import PosixBackend
 from rockefeller_spark.schema import KEY_COLS
+from rockefeller_spark.session import ENGINE_CONFS
 
 try:                             # ~5x faster manifest parse when present
     import orjson as _fastjson   # public PyPI package, optional
@@ -100,6 +101,7 @@ def _json_loads(raw: bytes) -> Any:
 logger = logging.getLogger(__name__)
 
 HINT_FILE = "version-hint.text"
+_LISTING_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 MAINT_LOCK = ".maint.lock"
 # bucket-spanning merge-on-read delta files live in a dedicated shard
 DELTA_SHARD = -1
@@ -569,14 +571,12 @@ class Snapshot:
         return sum(1 for entry in self.name_log if entry["v"] > v)
 
 
-def changed_buckets(a: Snapshot, b: Snapshot) -> set[int] | None:
-    """Buckets whose file sets differ between two snapshots of the SAME
-    bucket layout — computed from metadata only, loading ONLY the manifest
-    shards whose entries differ (untouched shards share entries
-    byte-identically, so they are skipped without I/O). Returns None when
-    a changed bucket-spanning delta file carries no touched-bucket set
-    (unknown reach = every bucket may have changed). Used by the change
-    feed's pruning and by commit rebase's disjointness check."""
+def _file_diff(a: Snapshot, b: Snapshot) \
+        -> "tuple[list[DataFile], list[DataFile]]":
+    """(files in b not in a, files in a not in b) — the net delta between
+    two snapshots — loading ONLY the manifest shards whose entries differ
+    (untouched shards share entries byte-identically, so they are skipped
+    without I/O)."""
     if (a.manifests is None or b.manifests is None
             or a._loader is None or b._loader is None):
         pa, pb = {f.path: f for f in a.files}, {f.path: f for f in b.files}
@@ -587,9 +587,24 @@ def changed_buckets(a: Snapshot, b: Snapshot) -> set[int] | None:
               for f in a._loader(e.path)}            # type: ignore[misc]
         pb = {f.path: f for e in b.manifests if e.path not in ea
               for f in b._loader(e.path)}            # type: ignore[misc]
+    return ([f for p, f in pb.items() if p not in pa],
+            [f for p, f in pa.items() if p not in pb])
+
+
+def changed_buckets(a: Snapshot, b: Snapshot) -> set[int] | None:
+    """Buckets whose file sets differ between two snapshots of the SAME
+    bucket layout — computed from metadata only (:func:`_file_diff`).
+    Returns None when a changed bucket-spanning delta file carries no
+    touched-bucket set (unknown reach = every bucket may have changed).
+    Used by the change feed's pruning and by commit rebase's
+    disjointness check."""
+    added, removed = _file_diff(a, b)
+    return _touched_buckets(added + removed)
+
+
+def _touched_buckets(files: "list[DataFile]") -> set[int] | None:
     out: set[int] = set()
-    for path in set(pa) ^ set(pb):
-        f = pa.get(path) or pb[path]
+    for f in files:
         if f.bucket is not None:
             out.add(f.bucket)
         elif f.buckets is not None:
@@ -784,7 +799,16 @@ def _stats_pool() -> ThreadPoolExecutor:
 
 
 class LakeTable:
-    """Handle on one icelake table rooted at ``path``."""
+    """Handle on one icelake table rooted at ``path``.
+
+    Constructing a handle raises its session's
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` to the
+    engine's value (``session.ENGINE_CONFS``) while the conf still holds
+    Spark's default of 32: :meth:`read` hands every scan its exact file
+    paths, and above the threshold Spark would launch a listing job just
+    to stat them. A value the session set on purpose is left alone. The
+    conf is set once here, not per read, so concurrent readers never see
+    it flip."""
 
     # shard-split threshold; class-level so tests can lower it per table
     manifest_target_entries = MANIFEST_TARGET_ENTRIES
@@ -808,6 +832,8 @@ class LakeTable:
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
+        if spark is not None and spark.conf.get(_LISTING_CONF, "32") == "32":
+            spark.conf.set(_LISTING_CONF, ENGINE_CONFS[_LISTING_CONF])
         self.path = os.path.abspath(path)
         self.backend = self.backend_factory(self.path)
         self.data_dir = os.path.join(self.path, "data")
@@ -1251,10 +1277,21 @@ class LakeTable:
             # crashed writer's caller retries its batch and the epoch
             # ledger turns the replay into skipped=True — the designed
             # at-least-once contract. Our own caller now rebases on the
-            # repaired, visible version instead of spinning.
-            self.backend.advance_pointer(self._pointer_rel(), snap.snapshot_id)
+            # repaired, visible version instead of spinning. A branch
+            # drop's claim on the slot is no snapshot: never publish it.
+            if self._branch is None or \
+                    self.backend.read(meta_rel) != self._DROP_CLAIM:
+                self.backend.advance_pointer(self._pointer_rel(),
+                                             snap.snapshot_id)
             raise CommitConflictError(
                 f"snapshot {snap.snapshot_id} already committed") from e
+        if self._branch is not None and \
+                not self.backend.exists(self._branch_rel(self._branch)):
+            # the branch was dropped while this commit was in flight
+            # (drop_branch deletes the ref first): withdraw the object
+            # rather than report a commit no ref can reach
+            self.backend.delete(meta_rel)
+            raise CommitConflictError(f"branch {self._branch!r} was dropped")
         self.backend.advance_pointer(self._pointer_rel(), snap.snapshot_id)
 
     # ------------------------------------------------------------- data files
@@ -1915,28 +1952,8 @@ class LakeTable:
         def ts_filter(df: DataFrame) -> DataFrame:
             # exact row-level bound on top of the file pruning (pushed to
             # the parquet scan, so row groups prune on the same stats)
-            if ts_lo is not None:
-                df = df.filter(F.col("ts") >= F.timestamp_micros(F.lit(ts_lo)))
-            if ts_hi is not None:
-                df = df.filter(F.col("ts") <= F.timestamp_micros(F.lit(ts_hi)))
-            if key_lo is not None:
-                df = df.filter(F.col(snap.bucket_col) >= F.lit(key_lo))
-            if key_hi is not None:
-                df = df.filter(F.col(snap.bucket_col) <= F.lit(key_hi))
-            if lsn_lo is not None:
-                df = df.filter(F.col("_lsn") >= F.lit(lsn_lo))
-            if lsn_hi is not None:
-                df = df.filter(F.col("_lsn") <= F.lit(lsn_hi))
-            for c, (slo, shi, is_ts) in gen_cols.items():
-                if slo is not None:
-                    df = df.filter(F.col(c) >= (
-                        F.timestamp_micros(F.lit(slo)) if is_ts
-                        else F.lit(where[c][0])))
-                if shi is not None:
-                    df = df.filter(F.col(c) <= (
-                        F.timestamp_micros(F.lit(shi)) if is_ts
-                        else F.lit(where[c][1])))
-            return df
+            return self._row_range_filter(df, snap, ts_range=ts_range,
+                                          key_range=key_range, where=where)
 
         if not by_era:
             return ts_filter(self.spark.createDataFrame([], snap.schema))
@@ -2335,7 +2352,6 @@ class LakeTable:
 
     # ------------------------------------------------------- refs: tags
     _REF_DIR = os.path.join("metadata", "refs")
-    _STAGE_DIR = os.path.join("metadata", "staged")
     _REF_NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,127}$")
 
     def _ref_rel(self, name: str) -> str:
@@ -2404,16 +2420,16 @@ class LakeTable:
             raise KeyError(f"no tag or branch {name!r}") from None
 
     # --------------------------------------------- refs: branches
-    # A branch (Iceberg mutable named ref) is WAP generalized to MULTI-
-    # commit audit workflows: any number of real commits land on the
-    # branch head — invisible to main readers — then one atomic
+    # A branch (Iceberg mutable named ref) holds any number of real
+    # commits on its head — invisible to main readers — until one atomic
     # fast-forward publish folds the NET file delta onto main under the
-    # same disjoint-bucket rebase rule staged publishes use. Branch
-    # snapshots are ordinary snapshot objects in a per-branch namespace
-    # (``metadata/branches/<name>/v*.json``) forked from the shared main
-    # prefix, so the two id sequences can never race each other's
-    # conditional PUTs; the branch head is the same monotonic pointer
-    # protocol as the table hint, just a different pointer object.
+    # disjoint-bucket rebase rule. A write-audit-publish stage is a
+    # one-commit branch named by its wap_id (Iceberg runs WAP through
+    # branches too). Branch snapshots are ordinary snapshot objects in a
+    # per-branch namespace (``metadata/branches/<name>/v*.json``) forked
+    # from the shared main prefix, so the two id sequences can never race
+    # each other's conditional PUTs; the branch head is the same monotonic
+    # pointer protocol as the table hint, just a different pointer object.
     _BRANCH_DIR = os.path.join("metadata", "branches")
 
     def _branch_rel(self, name: str) -> str:
@@ -2436,14 +2452,17 @@ class LakeTable:
                 f"branch handle {self._branch!r}")
 
     def create_branch(self, name: str, snapshot_id: int | None = None,
-                      note: str | None = None) -> dict[str, Any]:
+                      note: str | None = None, *,
+                      _wap: dict[str, Any] | None = None) -> dict[str, Any]:
         """Fork a mutable named branch from a main snapshot (default: the
         current one). Write through :meth:`on_branch`; read by name
         (``read("audit")`` follows the branch head); publish to main with
         :meth:`publish_branch`. Create-once like tags; the name must not
         collide with a tag (one ref namespace, Iceberg's rule).
         ``expire_snapshots`` pins the fork-point snapshot and every file
-        any branch commit references until the branch is dropped."""
+        any branch commit references until the branch is dropped.
+        (``_wap`` is the stage marker :meth:`stage_append` and
+        :meth:`stage_overwrite_buckets` record in the ref object.)"""
         self._main_only("create_branch")
         self._check_ref_name(name)
         if self.backend.exists(self._ref_rel(name)):
@@ -2454,6 +2473,8 @@ class LakeTable:
         self.snapshot(sid)                     # must exist (not expired)
         obj = {"name": name, "base": sid,
                "created_ms": int(time.time() * 1000), "note": note}
+        if _wap is not None:
+            obj["wap"] = _wap
         os.makedirs(os.path.join(self.path, self._REF_DIR), exist_ok=True)
         os.makedirs(os.path.join(self.path, self._BRANCH_DIR, name),
                     exist_ok=True)
@@ -2500,46 +2521,51 @@ class LakeTable:
         t._branch_base = int(b["base"])
         return t
 
+    # the bytes of a drop's claim on a branch version slot (see
+    # _drop_branch_at); no snapshot object ever holds them
+    _DROP_CLAIM = b'{"dropped": true}'
+
     def drop_branch(self, name: str) -> None:
         """Delete the branch ref, head pointer and its snapshot objects.
         The branch's data files and manifests become unreferenced and age
-        out through the next orphan sweep (same lifecycle as an abandoned
-        staged commit)."""
+        out through the next orphan sweep."""
         self._main_only("drop_branch")
         self._check_ref_name(name)
         if not self.backend.exists(self._branch_rel(name)):
             raise KeyError(f"no branch {name!r}")
+        # the ref goes first: a branch commit whose PUT lands after this
+        # finds no ref and withdraws (see _write_snapshot)
+        self.backend.delete(self._branch_rel(name))
         for v in self._branch_versions(name):
             rel = os.path.join(self._BRANCH_DIR, name, f"v{v:08d}.json")
             try:
                 self.backend.delete(rel)
             except FileNotFoundError:
                 pass
-        self.backend.delete(self._branch_rel(name))
         try:
             self.backend.delete(self._branch_head_rel(name))
         except FileNotFoundError:
             pass
+        try:    # one directory per branch: a WAP stream stages every batch
+            os.rmdir(os.path.join(self.path, self._BRANCH_DIR, name))
+        except OSError:
+            pass
 
-    def _snapshot_file_diff(self, a: Snapshot, b: Snapshot) \
-            -> "tuple[list[DataFile], set[str]]":
-        """(files in b not in a, paths in a not in b) — the net delta —
-        loading only the manifest shards that differ between the two
-        (shared shards are byte-identical by path and skipped, the
-        ``changed_buckets`` cost shape)."""
-        if a.manifests is None or b.manifests is None \
-                or a._loader is None or b._loader is None:
-            pa = {f.path: f for f in a.files}
-            pb = {f.path: f for f in b.files}
-        else:
-            ea = {e.path for e in a.manifests}
-            eb = {e.path for e in b.manifests}
-            pa = {f.path: f for e in a.manifests if e.path not in eb
-                  for f in a._loader(e.path)}
-            pb = {f.path: f for e in b.manifests if e.path not in ea
-                  for f in b._loader(e.path)}
-        return ([f for p, f in pb.items() if p not in pa],
-                {p for p in pa if p not in pb})
+    def _drop_branch_at(self, name: str, head: int) -> bool:
+        """Drop the branch only while its head is ``head``: first claim,
+        by conditional PUT, the version slot the next branch commit would
+        take. A commit that took the slot first keeps the branch (returns
+        False); one that comes later loses its PUT with
+        :class:`CommitConflictError`. Finding its own claim, a drop
+        interrupted by a crash resumes."""
+        claim = os.path.join(self._BRANCH_DIR, name, f"v{head + 1:08d}.json")
+        try:
+            self.backend.put_if_absent(claim, self._DROP_CLAIM)
+        except FileExistsError:
+            if self.backend.read(claim) != self._DROP_CLAIM:
+                return False
+        self.drop_branch(name)
+        return True
 
     def publish_branch(self, name: str, *, drop: bool = True,
                        max_races: int = 3) -> Snapshot:
@@ -2547,16 +2573,26 @@ class LakeTable:
         the branch's net file delta (adds + removes since the fork point),
         with the branch commits' epoch ledger merged in so exactly-once
         survives the publish. If main moved since the fork, the publish
-        REBASES under the exact rule staged publishes use — every
-        intervening main commit must touch only buckets DISJOINT from
-        everything the branch touched, with no schema/layout/name-log
-        drift on either side; otherwise :class:`CommitConflictError`
-        (re-branch from fresh state). A branch-side ADDITIVE schema
-        evolution publishes only onto unmoved main (true fast-forward).
-        ``drop`` (default) deletes the branch after the publish — its
-        snapshots' purpose (audit before visibility) is served."""
+        REBASES: every intervening main commit must touch only buckets
+        DISJOINT from everything the branch touched, with no schema/
+        layout/name-log drift on either side; otherwise
+        :class:`CommitConflictError` (re-branch from fresh state). A
+        branch-side ADDITIVE schema evolution publishes only onto unmoved
+        main (true fast-forward). ``drop`` (default) deletes the branch
+        after the publish — its snapshots' purpose (audit before
+        visibility) is served — but only while its head is still the one
+        published (:meth:`_drop_branch_at`); a branch commit racing the
+        publish keeps the branch, which can be published again.
+
+        Idempotent: a replayed publish (crash between the main commit and
+        the drop) finds the published snapshot by lineage, drops the
+        branch and returns it. A WAP branch (``stage_*``) publishes with
+        lineage ``wap_id`` / ``staged_base``; when main's epoch ledger
+        already holds the stage's ``(stream_id, epoch)`` it commits
+        nothing and returns main's current snapshot."""
         self._main_only("publish_branch")
         bh = self.on_branch(name)
+        wap = self.branch_obj(name).get("wap")
         head = bh.current()
         base_id = int(bh._branch_base)
         if head.snapshot_id == base_id:
@@ -2574,19 +2610,29 @@ class LakeTable:
         if head.n_buckets != base.n_buckets:
             raise CommitConflictError("branch rescaled buckets; re-apply "
                                       "the rescale on main")
-        adds, removed_paths = self._snapshot_file_diff(base, head)
-        touched = changed_buckets(base, head)
+        adds, removed = _file_diff(base, head)
+        touched = _touched_buckets(adds + removed)
+        lineage = {"op": "branch_publish", "branch": name,
+                   "branch_head": head.snapshot_id, "branch_base": base_id}
+        if wap is not None:
+            lineage = {**head.lineage, **lineage, "op": "wap_publish",
+                       "wap_id": name, "staged_base": base_id}
         for _ in range(max(1, max_races)):
             cur = self.current()
-            published = next(
-                (s for s in reversed(self.history())
-                 if s.lineage.get("op") == "branch_publish"
-                 and s.lineage.get("branch") == name
-                 and s.lineage.get("branch_head") == head.snapshot_id),
-                None)
+            if wap is not None and wap["stream_id"] is not None \
+                    and wap["epoch"] is not None \
+                    and cur.committed_epochs.get(wap["stream_id"], -1) \
+                    >= wap["epoch"]:
+                published = cur                # the stage's epoch is on main
+            else:
+                published = next(
+                    (s for s in reversed(self.history())
+                     if s.lineage.get("branch") == name
+                     and s.lineage.get("branch_head") == head.snapshot_id),
+                    None)
             if published is not None:          # crash-replayed publish
-                if drop and self.backend.exists(self._branch_rel(name)):
-                    self.drop_branch(name)
+                if drop:
+                    self._drop_branch_at(name, head.snapshot_id)
                 return published
             new_schema = None
             if cur.snapshot_id != base_id:
@@ -2614,69 +2660,49 @@ class LakeTable:
             # re-validation pass is needed
             try:
                 snap = self.commit(
-                    adds, removed_paths,
+                    adds, {f.path for f in removed},
                     new_schema=new_schema,
                     multi_version=head.multi_version or cur.multi_version,
                     merge_epochs=dict(head.committed_epochs),
-                    lineage={"op": "branch_publish", "branch": name,
-                             "branch_head": head.snapshot_id,
-                             "branch_base": base_id},
+                    lineage=lineage,
                     expected_version=cur.snapshot_id)
             except CommitConflictError:
                 continue                       # racing writer; revalidate
-            if drop:
-                # a branch commit landing between the head pin and here
-                # would be silently discarded by the drop — re-read the
-                # head and keep the branch alive if it moved past what
-                # was just published (the caller can publish again)
-                if bh.current_version() == head.snapshot_id:
-                    self.drop_branch(name)
-                else:
-                    logger.warning(
-                        "branch %r advanced past the published head "
-                        "v%d during publish; keeping the branch",
-                        name, head.snapshot_id)
+            if drop and not self._drop_branch_at(name, head.snapshot_id):
+                logger.warning(
+                    "branch %r advanced past the published head "
+                    "v%d during publish; keeping the branch",
+                    name, head.snapshot_id)
             return snap
         raise CommitConflictError(
             f"publish of branch {name!r} lost {max_races} commit races")
 
     # ------------------------------------- write-audit-publish (staged)
-    def _stage_rel(self, wap_id: str) -> str:
-        return os.path.join(self._STAGE_DIR, f"s-{wap_id}.json")
-
-    def _staged_obj(self, wap_id: str) -> dict[str, Any]:
-        try:
-            return _json_loads(self.backend.read(self._stage_rel(wap_id)))
-        except FileNotFoundError:
-            raise KeyError(f"no staged commit {wap_id!r}") from None
-
-    def _stage_put(self, kind: str, adds: list[DataFile],
-                   touched: "list[int] | None", *, wap_id: str | None,
-                   stream_id: str | None, epoch: int | None,
-                   lineage: dict[str, Any] | None,
-                   note: str | None) -> str:
+    # A stage is a branch named by its wap_id that holds one commit; the
+    # ref object's "wap" marker (kind, stream_id, epoch) tells it apart
+    # from ordinary branches.
+    def _stage(self, kind: str, df: DataFrame, buckets: "set[int] | None",
+               wap_id: str | None, write_salt: int, stream_id: str | None,
+               epoch: int | None, lineage: dict[str, Any] | None,
+               note: str | None) -> str:
+        self._main_only(f"stage_{kind}")
         wap_id = wap_id or uuid.uuid4().hex[:16]
-        self._check_ref_name(wap_id)
-        base = self.current_version()
-        # vintage stamp for audit reads; publish re-stamps to the real
-        # version via commit() — identical era either way, because publish
-        # refuses when the name_log moved past the staged base
-        for f in adds:
-            f.schema_v = base + 1
-        obj = {"wap_id": wap_id, "kind": kind, "base": base,
-               "created_ms": int(time.time() * 1000),
-               "adds": [f.to_json() for f in adds],
-               "touched": touched,
-               "rows_added": sum(f.rows or 0 for f in adds),
-               "stream_id": stream_id, "epoch": epoch,
-               "lineage": lineage or {}, "note": note}
-        os.makedirs(os.path.join(self.path, self._STAGE_DIR), exist_ok=True)
-        try:
-            self.backend.put_if_absent(
-                self._stage_rel(wap_id), json.dumps(obj).encode())
-        except FileExistsError:
-            raise ValueError(f"staged commit {wap_id!r} already exists") \
-                from None
+        snap = self.current()
+        adds = self._stage_write(df, snap.n_buckets, snap.bucket_col,
+                                 write_salt)
+        remove: set[str] = set()
+        if buckets is not None:
+            bad = {f.bucket for f in adds} - set(buckets)
+            if bad:
+                raise ValueError(
+                    f"staged df contains untouched buckets {sorted(bad)}")
+            remove = {f.path for f in snap.files_for(set(buckets))
+                      if f.bucket is not None}
+        self.create_branch(wap_id, snap.snapshot_id, note,
+                           _wap={"kind": kind, "stream_id": stream_id,
+                                 "epoch": epoch})
+        self.on_branch(wap_id).commit(adds, remove, stream_id=stream_id,
+                                      epoch=epoch, lineage=lineage)
         return wap_id
 
     def stage_append(self, df: DataFrame, *, wap_id: str | None = None,
@@ -2685,33 +2711,18 @@ class LakeTable:
                      lineage: dict[str, Any] | None = None,
                      note: str | None = None) -> str:
         """Write-audit-publish, append shape (Iceberg stage-only commit /
-        ``spark.wap.id``): the data files are fully written and a staged
-        marker records the would-be commit, but the table's current
-        pointer DOES NOT MOVE — readers cannot see the rows. Audit via
-        :meth:`read_staged` (plus any checks — row counts, quarantine
-        rates, fsck), then :meth:`publish_staged` makes it visible
-        atomically, or :meth:`abandon_staged` discards it (files are
-        reclaimed by the orphan sweep). Staging costs exactly what the
-        write costs; audit and publish are metadata-side."""
-        self._main_only("stage_append (a branch IS the multi-commit "
-                        "audit workflow — commit to it directly)")
-        snap = self.current()
-        adds = self._stage_write(df, snap.n_buckets, snap.bucket_col,
-                                 write_salt)
-        touched: "list[int] | None" = []
-        for f in adds:
-            if f.bucket is not None:
-                touched.append(f.bucket)
-            elif f.buckets is not None:
-                touched.extend(f.buckets)
-            else:
-                touched = None                 # unknown reach: publish
-                break                          # requires an unmoved table
-        if touched is not None:
-            touched = sorted(set(touched))
-        return self._stage_put("append", adds, touched, wap_id=wap_id,
-                               stream_id=stream_id, epoch=epoch,
-                               lineage=lineage, note=note)
+        ``spark.wap.id``): the data files are fully written and committed
+        as the one commit of a branch named ``wap_id`` (default: a fresh
+        id; it shares the ref namespace with tags and branches), but the
+        table's current pointer DOES NOT MOVE — readers cannot see the
+        rows. Audit via :meth:`read_staged` (plus any checks — row
+        counts, quarantine rates, fsck), then :meth:`publish_staged`
+        makes it visible atomically, or :meth:`abandon_staged` discards
+        it (files are reclaimed by the orphan sweep). Staging costs the
+        write plus one covering-shard commit; audit and publish are
+        metadata-side."""
+        return self._stage("append", df, None, wap_id, write_salt,
+                           stream_id, epoch, lineage, note)
 
     def stage_overwrite_buckets(self, df: DataFrame, buckets: set[int], *,
                                 wap_id: str | None = None,
@@ -2721,64 +2732,28 @@ class LakeTable:
                                 lineage: dict[str, Any] | None = None,
                                 note: str | None = None) -> str:
         """Write-audit-publish, copy-on-write shape: stage a replacement
-        of exactly ``buckets`` (the remove set is computed AT PUBLISH
-        against the then-current snapshot, so a publish rebased over
-        disjoint-bucket commits replaces the right files)."""
-        self._main_only("stage_overwrite_buckets")
-        snap = self.current()
-        adds = self._stage_write(df, snap.n_buckets, snap.bucket_col,
-                                 write_salt)
-        bad = {f.bucket for f in adds} - set(buckets)
-        if bad:
-            raise ValueError(
-                f"staged df contains untouched buckets {sorted(bad)}")
-        return self._stage_put("overwrite", adds, sorted(buckets),
-                               wap_id=wap_id, stream_id=stream_id,
-                               epoch=epoch, lineage=lineage, note=note)
+        of exactly ``buckets``. The publish rebases over commits to
+        disjoint buckets like any branch publish, so the stage's removes
+        — the staged base's files of ``buckets``, untouched on main under
+        that rule — replace the right files."""
+        return self._stage("overwrite", df, buckets, wap_id, write_salt,
+                           stream_id, epoch, lineage, note)
 
     def staged(self) -> dict[str, dict[str, Any]]:
-        """Pending staged commits, by wap_id (marker metadata only)."""
-        d = os.path.join(self.path, self._STAGE_DIR)
-        if not os.path.isdir(d):
-            return {}
+        """Pending staged commits, by wap_id: each WAP branch's ref
+        (``base``, ``note``, ``created_ms``, ``head``), its marker
+        (``kind``, ``stream_id``, ``epoch``) and the net ``adds`` /
+        ``rows_added`` of its commit — O(changed manifest shards) per
+        stage."""
         out: dict[str, dict[str, Any]] = {}
-        for fname in sorted(os.listdir(d)):
-            if fname.startswith("s-") and fname.endswith(".json"):
-                obj = _json_loads(self.backend.read(
-                    os.path.join(self._STAGE_DIR, fname)))
-                out[obj["wap_id"]] = obj
+        for name, b in self.branches().items():
+            if "wap" in b:
+                adds, _ = _file_diff(self.snapshot(int(b["base"])),
+                                    self.snapshot(name))
+                out[name] = {**b, **b["wap"],
+                             "adds": [f.to_json() for f in adds],
+                             "rows_added": sum(f.rows or 0 for f in adds)}
         return out
-
-    def staged_snapshot(self, wap_id: str,
-                        buckets: set[int] | None = None) -> Snapshot:
-        """The staged commit's would-be table state as a materialized
-        (unpublished) Snapshot — the audit surface. Pass ``buckets`` to
-        materialize only the covering manifest shards (the usual audit
-        reads just the staged buckets; driver cost stays O(covering
-        shards), not O(table))."""
-        st = self._staged_obj(wap_id)
-        base = self.snapshot(st["base"])
-        adds = [DataFile.from_json(d) for d in st["adds"]]
-        if st["kind"] == "overwrite":
-            touched = set(st["touched"])
-            gone = {f.path for f in base.files_for(touched)
-                    if f.bucket is not None}
-            files = [f for f in base.files_for(buckets)
-                     if f.path not in gone] + adds
-        else:
-            files = base.files_for(buckets) + adds
-        # the audit read must resolve exactly as the PUBLISHED table
-        # would: publish inherits the base's multi_version (same rule as
-        # append()/commit()), so the staged view does too
-        multi_version = base.multi_version
-        return Snapshot(
-            snapshot_id=base.snapshot_id, parent_id=base.parent_id,
-            schema=base.schema, n_buckets=base.n_buckets,
-            bucket_col=base.bucket_col, files=files,
-            committed_epochs=dict(base.committed_epochs),
-            lineage={"op": "staged", "wap_id": wap_id},
-            timestamp_ms=st["created_ms"], multi_version=multi_version,
-            name_log=list(base.name_log))
 
     def read_staged(self, wap_id: str, *, raw: bool = False,
                     staged_only: bool = False, **read_kw) -> DataFrame:
@@ -2791,22 +2766,21 @@ class LakeTable:
 
         ``staged_only=True`` reads JUST the staged files — the "what am
         I about to publish" audit (row counts, quality gates, quarantine
-        rates over the new rows alone). Planning cost is O(adds), no
-        base manifest ever loads — the right shape when the stage is a
-        trickle batch against a 10^10-row table."""
+        rates over the new rows alone): the branch's net adds
+        (:func:`_file_diff` of base and head). Planning loads
+        only the manifest shards the stage changed — O(changed manifest
+        shards), not O(adds) and not O(table)."""
+        bh = self.on_branch(wap_id)
+        snap = bh.current()
         if staged_only:
-            st = self._staged_obj(wap_id)
-            base = self.snapshot(st["base"])
+            adds, _ = _file_diff(self.snapshot(bh._branch_base), snap)
             snap = Snapshot(
-                snapshot_id=base.snapshot_id, parent_id=base.parent_id,
-                schema=base.schema, n_buckets=base.n_buckets,
-                bucket_col=base.bucket_col,
-                files=[DataFile.from_json(d) for d in st["adds"]],
-                committed_epochs={}, timestamp_ms=st["created_ms"],
-                multi_version=base.multi_version,
-                name_log=list(base.name_log))
-        else:
-            snap = self.staged_snapshot(wap_id, read_kw.get("buckets"))
+                snapshot_id=snap.snapshot_id, parent_id=snap.parent_id,
+                schema=snap.schema, n_buckets=snap.n_buckets,
+                bucket_col=snap.bucket_col, files=adds,
+                committed_epochs={}, timestamp_ms=snap.timestamp_ms,
+                multi_version=snap.multi_version,
+                name_log=list(snap.name_log))
         if raw:
             return self.read(_snap=snap, **read_kw)
         if snap.multi_version:
@@ -2846,12 +2820,14 @@ class LakeTable:
 
     def _row_range_filter(self, df: DataFrame, snap: "Snapshot", *,
                           ts_range: "tuple | None" = None,
+                          key_range: "tuple | None" = None,
                           where: "dict[str, tuple] | None" = None) \
             -> DataFrame:
         """Exact row-level closed-range filters with :meth:`read`'s
-        semantics but NO file pruning — :meth:`read_staged` applies these
-        AFTER LWW resolution on multi-version snapshots, where a
-        version-sensitive filter evaluated pre-dedupe would be wrong."""
+        semantics but NO file pruning — :meth:`read` applies these on top
+        of its file pruning, and :meth:`read_staged` AFTER LWW resolution
+        on multi-version snapshots, where a version-sensitive filter
+        evaluated pre-dedupe would be wrong."""
         ftypes = {f.name: f.dataType for f in snap.schema.fields}
 
         def rng(col: str, lo, hi, is_ts: bool) -> None:
@@ -2874,6 +2850,8 @@ class LakeTable:
                 raise ValueError("pass ts bounds via ts_range or "
                                  "where['ts'], not both")
             rng("ts", ts_range[0], ts_range[1], True)
+        if key_range is not None:
+            rng(snap.bucket_col, key_range[0], key_range[1], False)
         for c, (lo, hi) in (where or {}).items():
             if lo is None and hi is None:
                 continue
@@ -2889,77 +2867,19 @@ class LakeTable:
         return df
 
     def publish_staged(self, wap_id: str, *, max_races: int = 3) -> Snapshot:
-        """Atomically make a staged commit visible (Iceberg cherry-pick /
-        fast-forward). If the table moved since staging, the publish
-        REBASES when every intervening commit touched only DISJOINT
-        buckets under the same schema/layout (validated from manifest
-        metadata alone, the same rule the apply path's conflict rebase
-        uses); otherwise raises :class:`CommitConflictError` — re-stage
-        from fresh state. Idempotent: a replayed publish (crash between
-        the commit and the marker cleanup) finds the published snapshot —
-        by epoch ledger when the stage carries ``stream_id``/``epoch``,
-        by wap_id lineage scan otherwise — cleans up, and returns it."""
-        st = self._staged_obj(wap_id)
-        adds = [DataFile.from_json(d) for d in st["adds"]]
-        stream_id, epoch = st["stream_id"], st["epoch"]
-        touched = set(st["touched"]) if st["touched"] is not None else None
-        for _ in range(max(1, max_races)):
-            cur = self.current()
-            # replayed publish after a crash mid-cleanup?
-            if stream_id is not None and epoch is not None and \
-                    cur.committed_epochs.get(stream_id, -1) >= epoch:
-                self.abandon_staged(wap_id)
-                return cur
-            published = next(
-                (s for s in reversed(self.history())
-                 if s.lineage.get("wap_id") == wap_id
-                 and s.lineage.get("op") == "wap_publish"), None)
-            if published is not None:
-                self.abandon_staged(wap_id)
-                return published
-            if cur.snapshot_id != st["base"]:
-                try:
-                    base = self.snapshot(st["base"])
-                except ValueError:
-                    raise CommitConflictError(
-                        f"staged base v{st['base']} expired; re-stage") \
-                        from None
-                if cur.n_buckets != base.n_buckets \
-                        or cur.schema != base.schema \
-                        or cur.name_log != base.name_log:
-                    raise CommitConflictError(
-                        "table layout/schema evolved since staging; re-stage")
-                diff = changed_buckets(base, cur)
-                if diff is None or touched is None or diff & touched:
-                    raise CommitConflictError(
-                        "intervening commits overlap the staged buckets; "
-                        "re-stage from fresh state")
-            if st["kind"] == "overwrite":
-                remove = {f.path for f in cur.files_for(touched)
-                          if f.bucket is not None}
-            else:
-                remove = set()
-            try:
-                snap = self.commit(
-                    adds, remove, stream_id=stream_id, epoch=epoch,
-                    lineage={**st["lineage"], "op": "wap_publish",
-                             "wap_id": wap_id, "staged_base": st["base"]},
-                    expected_version=cur.snapshot_id)
-            except CommitConflictError:
-                continue                       # racing writer; revalidate
-            self.abandon_staged(wap_id)
-            return snap
-        raise CommitConflictError(
-            f"publish of {wap_id!r} lost {max_races} commit races")
+        """Atomically make a staged commit visible: :meth:`publish_branch`
+        of its branch — the same disjoint-bucket rebase, idempotent
+        replay and exactly-once epoch check — and the branch is dropped."""
+        return self.publish_branch(wap_id, max_races=max_races)
 
     def abandon_staged(self, wap_id: str) -> None:
-        """Discard a staged commit's marker. Its data files become true
-        orphans and are reclaimed by the next orphan sweep past the grace
-        window (publish uses the same cleanup with the files now owned by
-        the published snapshot)."""
+        """Discard a staged commit: drop its branch (a no-op when there
+        is none). Its data files become orphans and are reclaimed by the
+        next orphan sweep past the grace window."""
         try:
-            self.backend.delete(self._stage_rel(wap_id))
-        except FileNotFoundError:
+            if "wap" in self.branch_obj(wap_id):
+                self.drop_branch(wap_id)
+        except KeyError:
             pass
 
     def lookup(self, key_value: str) -> DataFrame:
@@ -3088,34 +3008,29 @@ class LakeTable:
             current = self.current_version()
             history = self.history()
             # refs pin snapshots past the keep_last window: tagged
-            # snapshots stay time-travelable by name, and a pending
-            # staged commit's BASE stays loadable so its audit read and
-            # publish-rebase keep working. Staged markers older than
-            # staged_ttl_s are abandoned-by-policy and reaped (their
-            # data files then age out through the orphan sweep).
+            # snapshots stay time-travelable by name
             pinned: set[int] = {t["snapshot_id"] for t in self.tags().values()}
             # branches pin their FORK POINT on main (the publish rebase
             # needs it loadable) and every branch-namespace snapshot is
             # retained outright — branch snapshot objects live outside
             # meta_dir so main expiry never lists them, but their FILES
             # must stay alive until the branch is dropped, so they join
-            # the liveness set below
+            # the liveness set below. A staged commit (WAP branch) older
+            # than staged_ttl_s is abandoned-by-policy and dropped; its
+            # data files then age out through the orphan sweep.
             branch_snaps: list[Snapshot] = []
+            staged_reaped = 0
             for bname, bobj in self.branches().items():
+                if "wap" in bobj and \
+                        now - bobj["created_ms"] / 1000.0 > staged_ttl_s:
+                    if not dry_run:
+                        self.drop_branch(bname)
+                    staged_reaped += 1
+                    continue
                 pinned.add(int(bobj["base"]))
                 bh = self.on_branch(bname)
                 branch_snaps.extend(
                     bh.snapshot(v) for v in self._branch_versions(bname))
-            staged_live: list[dict[str, Any]] = []
-            staged_reaped = 0
-            for st in self.staged().values():
-                if now - st["created_ms"] / 1000.0 > staged_ttl_s:
-                    if not dry_run:
-                        self.abandon_staged(st["wap_id"])
-                    staged_reaped += 1
-                else:
-                    staged_live.append(st)
-                    pinned.add(st["base"])
             retained = [s for s in history
                         if s.snapshot_id > current - keep_last
                         or s.snapshot_id in pinned] + branch_snaps
@@ -3222,12 +3137,6 @@ class LakeTable:
                         referenced.update(f.path for f in s.files)
                 for rel in retained_manifests:
                     referenced.update(self._load_manifest_cols(rel)["path"])
-                # staged-but-unpublished files are referenced by no
-                # snapshot; their markers keep them alive until publish/
-                # abandon/TTL (the grace window alone would eat a stage
-                # audited for longer than an hour)
-                for st in staged_live:
-                    referenced.update(d["path"] for d in st["adds"])
                 for fname in os.listdir(self.data_dir):
                     rel = os.path.join("data", fname)
                     if rel in referenced or rel in reclaimed:
@@ -3315,7 +3224,8 @@ class LakeTable:
         analog): layout, size aggregates, schema-evolution state, refs,
         pending staged commits, retained history. Metadata-flat — the
         same manifest-list aggregates :meth:`stats` uses, plus O(refs +
-        retained snapshots) small reads; no data or manifest loads."""
+        retained snapshots) small reads and each pending stage's changed
+        manifest shards (:meth:`staged`); no data loads."""
         snap = self.current()
         st = self.stats()
         return {

@@ -48,6 +48,8 @@ ENGINE_CONFS: dict[str, str] = {
     # On a slow remote object store (one round trip per stat) with many
     # thousands of files per scan, that can cost more than a listing job
     # spread over executors; lower this conf per session there.
+    # LakeTable raises the threshold on sessions built elsewhere too; the
+    # entry stays here for reads outside LakeTable (WAL sources).
     "spark.sql.sources.parallelPartitionDiscovery.threshold": "1000000",
     # local mode runs everything in the driver JVM; the 1g default heap is
     # far too small for multi-million-row shuffles. Overridable via env.

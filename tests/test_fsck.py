@@ -157,4 +157,4 @@ def test_refs_and_staged_findings(spark, table):
     rep = check_table(table)
     codes = {x.code for x in rep.findings}
     assert "tag-target-missing" in codes
-    assert "staged-file-missing" in codes
+    assert "branch-file-missing" in codes

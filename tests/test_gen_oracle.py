@@ -100,3 +100,17 @@ def test_gen_output_pinned_for_nonnegative_seeds(spark):
                                    seed=seed, num_partitions=3)
         assert hashlib.sha256(repr(ev.collect()).encode()).hexdigest() \
             == digest
+
+
+def test_gen_scramble_plans_no_shuffle_at_north_star_scale(spark):
+    """A shuffled 10^10-event log is planned as the segment-local
+    scramble alone: no Exchange and no Sort (nothing is executed)."""
+    ev = gen.gen_change_events(spark, n_events=10**10, n_convs=1000, seed=3)
+    plan = ev._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Sort" not in plan, plan
+
+
+def test_gen_scramble_rejects_n_past_int64_bound(spark):
+    import pytest
+    with pytest.raises(ValueError, match="int64"):
+        gen.gen_change_events(spark, n_events=gen._SCRAMBLE_MAX_N + 1)

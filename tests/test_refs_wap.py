@@ -165,20 +165,64 @@ def test_wap_overwrite_rebases_over_disjoint_commits(spark, table):
     table.abandon_staged(wap2)
 
 
-def test_wap_publish_replay_is_idempotent(spark, table):
+def test_wap_publish_replay_is_idempotent(spark, table, monkeypatch):
     ev = gen.gen_change_events(spark, n_events=400, n_convs=5, seed=54)
     _apply_slice(spark, table, ev.toPandas(), ev.schema, -1, 400)
     extra = _stored_extra(spark, 98, "x")
     wap = table.stage_append(extra, wap_id="nightly-42")
-    marker = table.backend.read(table._stage_rel(wap))
-    snap = table.publish_staged(wap)
-    # crash between commit and marker cleanup: the marker survives and
-    # the publish is replayed verbatim
-    table.backend.put_if_absent(table._stage_rel(wap), marker)
+    # crash between the main commit and the branch drop: the stage
+    # survives and the publish is replayed verbatim
+    real_drop = LakeTable.drop_branch
+
+    def crash(self, name):
+        raise RuntimeError("injected crash before the drop")
+
+    monkeypatch.setattr(LakeTable, "drop_branch", crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        table.publish_staged(wap)
+    monkeypatch.setattr(LakeTable, "drop_branch", real_drop)
+    snap = table.current()
+    assert snap.lineage["wap_id"] == wap and wap in table.staged()
     again = table.publish_staged(wap)
     assert again.snapshot_id == snap.snapshot_id      # found, not re-committed
     assert table.staged() == {}
     assert table.current_version() == snap.snapshot_id
+
+
+def test_wap_publish_skips_epoch_already_on_main(spark, table):
+    """Exactly-once for staged epochs: when main already holds the
+    stage's (stream_id, epoch), the publish commits nothing and the
+    stage is gone."""
+    ev = gen.gen_change_events(spark, n_events=400, n_convs=5, seed=58)
+    pdf = ev.toPandas()
+    _apply_slice(spark, table, pdf, ev.schema, -1, 200)
+    wap = table.stage_append(_stored_extra(spark, 95, "ep"),
+                             stream_id="s-wap", epoch=3)
+    # the same epoch reaches main another way (a redelivered batch)
+    apply_batch(table, spark.createDataFrame(pdf[pdf.lsn > 200], ev.schema),
+                stream_id="s-wap", epoch=3)
+    v = table.current_version()
+    snap = table.publish_staged(wap)
+    assert snap.snapshot_id == v == table.current_version()
+    assert table.staged() == {} and wap not in table.branches()
+
+
+def test_wap_stage_is_a_branch_in_the_ref_namespace(spark, table):
+    """A stage is a branch named by its wap_id: listed by branches() and
+    the <name>_refs view, colliding with tags, and the staged TTL reaps
+    it while ordinary branches stay."""
+    from rockefeller_spark.sqlapi import register_meta_views
+    table.create_branch("dev")
+    wap = table.stage_append(_stored_extra(spark, 59, "ns"), wap_id="w-1")
+    assert set(table.branches()) == {"dev", wap}
+    assert set(table.staged()) == {wap}
+    refs = register_meta_views(table, "t")["t_refs"]
+    assert {r["name"] for r in refs.collect()} == {"main", "dev", wap}
+    with pytest.raises(ValueError, match="namespace"):
+        table.tag(wap)
+    stats = table.expire_snapshots(keep_last=1, staged_ttl_s=0.0)
+    assert stats["staged_reaped"] == 1
+    assert set(table.branches()) == {"dev"}
 
 
 def test_wap_abandon_sweep_and_ttl(spark, table):
@@ -536,3 +580,44 @@ def test_publish_drop_keeps_branch_that_advanced(spark, table, monkeypatch):
     # the branch still exists and still holds the unpublished commit
     assert "wip" in table.branches()
     assert b.current().files  # head readable
+
+
+def test_publish_drop_race_never_loses_a_branch_commit(spark, table,
+                                                       monkeypatch):
+    """A branch commit racing publish's drop, after the publish checked
+    the head and before anything is deleted, either lands first and keeps
+    the branch or fails with CommitConflictError — it is never silently
+    discarded with the branch."""
+    ev = gen.gen_change_events(spark, n_events=400, n_convs=6, seed=93)
+    pdf = ev.toPandas()
+    _apply_slice(spark, table, pdf, ev.schema, -1, 200)
+    table.create_branch("wip")
+    b = table.on_branch("wip")
+    _apply_slice(spark, b, pdf, ev.schema, 200, 400)
+    late = _stored_extra(spark, 94, "late", n_events=40, n_convs=2)
+
+    real_delete = type(table.backend).delete
+    raced: dict[str, bool] = {}
+
+    def racing_delete(self, rel):
+        if not raced and "wip" in rel:
+            raced["fired"] = True
+            try:
+                b.append(late)
+                raced["landed"] = True
+            except CommitConflictError:
+                raced["conflict"] = True
+        return real_delete(self, rel)
+
+    monkeypatch.setattr(type(table.backend), "delete", racing_delete)
+    published = table.publish_branch("wip")
+    monkeypatch.setattr(type(table.backend), "delete", real_delete)
+    assert raced.get("fired")
+    if raced.get("landed"):
+        assert "wip" in table.branches()
+        assert b.read().filter(
+            F.col("conv_id").startswith("late-")).count() > 0
+    else:
+        assert raced.get("conflict")
+        assert "wip" not in table.branches()
+    assert table.current_version() == published.snapshot_id
